@@ -1,30 +1,43 @@
-"""Distributed connected components over an edge list — the transitive-
-closure step of near-duplicate deduplication.
+"""Graph operators over edge lists: components, PageRank, distances,
+cores, triangles and neighborhood sketches.
 
-The reference's dedup guarantees transitivity only within a block
-(per-block ``np.unique``, ``docs/tutorial/ranking/taobao/data/
-deduplicate.py:42-80``); corpus-level LSH dedup needs true components:
-min-id "absorption" (drop every id that appears as the larger member of
-a pair) is wrong whenever a non-minimal node is only ever the SMALLER
-member of its edges — e.g. edges (1,3),(2,3): node 2 survives absorption
-but is in component {1,2,3}.
+Each operator is a chain of equi-joins and node-keyed partial
+aggregates, so every shuffle is keyed on a node id and never forms an
+all-pairs product. The iterative ones repeat one such round until a
+fixed point or for a fixed count. Shared private helpers, one per idea:
 
-Algorithm: iterative min-label propagation. labels start as own id; each
-round every node takes the min of its own label and its neighbors'
-labels; stop when no label changes. Rounds needed = graph diameter
-(near-dup clusters are shallow; the worst case is a path). Each round is
-one join + one groupBy — both shuffles on the node id, partial-agg
-combined. Lineage is cut with an eager localCheckpoint per round so the
-plan does not grow with iterations.
+- ``_sym_edges``: the edge prologue of connected_components,
+  bfs_distances, shortest_paths, kcore and hyperball_reach.
+- ``_fingerprint``: the convergence check of connected_components,
+  connected_components_star and the min-plus loop.
+- ``_min_plus``: the relaxation loop of bfs_distances (unit step) and
+  shortest_paths (edge-weight step).
+- ``_pagerank_loop``: the exact-integer iteration of pagerank (every
+  node restarts) and personalized_pagerank (seeds restart).
+- ``_canonical_edges`` / ``_triangles``: the ``a < b`` edge set of
+  triangle_count, clustering_coefficient and link_prediction, and the
+  wedge-close triangle enumeration of the first two.
+
+Lineage-cut policy (each eager ``localCheckpoint`` is one Spark job):
+
+- The caller's edge plan is cut eagerly once at entry. A symmetrizing
+  union, a degree join or a node-set union would otherwise evaluate an
+  expensive edge frame (a verified near-dup pair join, a fuzzy-match
+  verify) once per reference. 16 bytes a row, and the cut folds into
+  jobs the prologue runs anyway.
+- A loop with a convergence check cuts its state eagerly every round,
+  before the check: the plan stays flat in the round count and the
+  check reads materialized state.
+- A fixed-count loop whose state has one consumer (PageRank) cuts only
+  every 4th iteration. label_propagation cuts lazily.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "connected_components",
-    "connected_components_fast",
     "connected_components_star",
     "pagerank",
     "personalized_pagerank",
@@ -40,6 +53,43 @@ __all__ = [
 ]
 
 
+def _sym_edges(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    directed: bool = False,
+    weight: Column | None = None,
+) -> DataFrame:
+    """Edge prologue: project to ``(_n, _m)`` (plus ``_w`` when a weight
+    is given), cut eagerly, add every reversed pair unless ``directed``,
+    ``distinct``, cut eagerly. Two jobs."""
+    cols = [F.col(src).alias("_n"), F.col(dst).alias("_m")]
+    if weight is not None:
+        cols.append(weight.alias("_w"))
+    sym = edges.select(*cols).localCheckpoint(eager=True)
+    if not directed:
+        sym = sym.union(
+            sym.select(
+                F.col("_m").alias("_n"), F.col("_n").alias("_m"),
+                *sym.columns[2:],
+            )
+        )
+    return sym.distinct().localCheckpoint(eager=True)
+
+
+def _fingerprint(df: DataFrame, expr: Column) -> tuple:
+    """(row count, exact ``decimal(38,0)`` sum of ``expr``) in one
+    aggregate and one collect: the fixed-point check shared by the
+    component and min-plus loops. The sum is overflow-free and
+    order-insensitive; the count catches rows that appear without
+    moving the sum."""
+    return tuple(
+        df.agg(
+            F.count(F.lit(1)), F.sum(expr.cast("decimal(38,0)"))
+        ).collect()[0]
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -48,7 +98,11 @@ def connected_components(
 ) -> DataFrame:
     """Return (id, component) for every node in ``edges``, where
     ``component`` is the smallest id reachable from the node. Undirected:
-    each input pair is used in both directions.
+    each input pair is used in both directions. This is the transitive
+    closure step of near-duplicate dedup: min-id absorption (drop every
+    id that is the larger member of some pair) is wrong whenever a
+    non-minimal node is only ever the smaller member of its edges, e.g.
+    edges (1,3),(2,3) leave node 2 although it is in component {1,2,3}.
 
     Each of the ``max_iter`` rounds runs TWO propagation steps before the
     materialization/convergence check, so labels fully converge once
@@ -72,17 +126,7 @@ def connected_components(
     every tentative label is a member of the node's own component, so
     the fixpoint is unchanged). Output is identical in all cases.
     """
-    # materialize the caller's edge plan ONCE before symmetrizing: the
-    # union references it in both directions, so without this cut an
-    # expensive edge frame (a verified near-dup pair join, a fuzzy-match
-    # verify) would be computed twice (round-12, guide §1.2; 16
-    # bytes/row, and the eager cut folds into the jobs the loop runs
-    # anyway)
-    e0 = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    sym = e0.union(e0.select(F.col("_m").alias("_n"), F.col("_n").alias("_m")))
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = _sym_edges(edges, src, dst)
 
     # one-pass tentative labeling: min(node, neighbors(node))
     labels = (
@@ -103,14 +147,6 @@ def connected_components(
     if violations == 0:
         return labels
 
-    def _label_sum(lbl: DataFrame):
-        # labels only ever decrease, so the (exact, overflow-free) sum of
-        # components is a strictly decreasing convergence measure — one
-        # cheap aggregate per round instead of a join-and-compare
-        return lbl.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
     def _propagate(lbl: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(
@@ -129,49 +165,23 @@ def connected_components(
             ).alias("component"),
         )
 
-    prev_sum = _label_sum(labels)
+    # labels only ever decrease, so the exact label sum is a strictly
+    # decreasing convergence measure (the node count is constant)
+    prev = _fingerprint(labels, F.col("component"))
     for _ in range(max_iter):
         # two propagation steps per materialization/convergence check:
-        # the checkpoint + sum-collect are the fixed per-round cost
-        # (each is a full job), and labels are monotone decreasing, so
-        # checking every other step can at most do one redundant round
+        # the checkpoint + fingerprint collect are the fixed per-round
+        # cost (each is a full job), and labels are monotone decreasing,
+        # so checking every other step can at most do one redundant round
         labels = _propagate(_propagate(labels)).localCheckpoint(eager=True)
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:
+        cur = _fingerprint(labels, F.col("component"))
+        if cur == prev:
             return labels
-        prev_sum = cur_sum
+        prev = cur
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds of "
         f"two propagations each (effective diameter bound {2 * max_iter})"
     )
-
-
-def connected_components_fast(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """One-pass components with a proven fallback: compute each node's
-    tentative label ``min(node, neighbors(node))``, then CHECK it — if
-    every edge has equal endpoint labels, the labeling is uniform per
-    component and therefore equals the component minimum (the min node
-    m labels itself m), so it is exactly :func:`connected_components`'s
-    answer after ONE join+agg instead of multi-round propagation.
-    Otherwise fall back to the iterative algorithm.
-
-    This is the cheap path for entity-resolution workloads where
-    candidate pairs overwhelmingly form 2-node (original, duplicate)
-    components: the full star-contraction machinery pays a fixed
-    multi-job round cost even when no chains exist. The check is one
-    aggregate (a single driver-side scalar), so correctness never rests
-    on an assumption about the input.
-
-    Round-12: :func:`connected_components` itself now runs this
-    one-pass-then-check plan first and warm-starts its propagation loop
-    from the tentative labels on the rare fallback, so this function is
-    a straight delegate kept for API stability.
-    """
-    return connected_components(edges, src, dst)
 
 
 def _local_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -331,20 +341,12 @@ def connected_components_star(
             .distinct()
         )
 
-    def _sig(ed: DataFrame):
-        # cheap fixed-point check: count + order-insensitive hash-sum
-        row = ed.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.col("_hi"), F.col("_lo")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    prev = _sig(e)
+    # fixed-point check: count + order-insensitive hash-sum of the edges
+    sig = F.xxhash64(F.col("_hi"), F.col("_lo"))
+    prev = _fingerprint(e, sig)
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = _sig(e)
+        cur = _fingerprint(e, sig)
         if cur == prev:
             break
         prev = cur
@@ -364,45 +366,39 @@ def connected_components_star(
     )
 
 
-def pagerank(
+def _pagerank_loop(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 3,
-    damping_pct: int = 85,
-    scale: int = 1_000_000_000,
+    src: str,
+    dst: str,
+    seeds: DataFrame | None,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list, computed in
-    EXACT integer arithmetic so the result is bit-identical on any engine
-    (no float summation-order drift): ranks are BIGINTs at ``scale``,
-    each node's contribution is ``rank div out_degree`` (truncating
-    integer division), and the damped update is
-    ``((100-d)*scale) div 100 + (d * sum_contrib) div 100``.
+    """Exact-integer PageRank iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. Each node carries a restart weight
+    ``r`` (1 for every node when ``seeds`` is None, else 1 on seed nodes
+    and 0 elsewhere): ranks start at ``r * scale`` and each update is
+    ``r * ((100-d)*scale div 100) + (d * sum_contrib) div 100``, where a
+    node's contribution is ``rank div out_degree`` (truncating integer
+    division). Ranks are BIGINTs, so the result is bit-identical on any
+    engine (no float summation-order drift).
 
     Per iteration: one equi-join of edges against ranks on the source id
     and one partial-agg groupBy on the destination id — both shuffles on
     the node key, combined map-side, so shuffled bytes scale with
-    |edges| not iterations x corpus. Lineage is cut with an eager
-    localCheckpoint every 4th iteration (round-12: each rank state is
-    consumed exactly once by the next iteration, so the un-checkpointed
-    plan grows LINEARLY — 3 operators per iteration — and the typical
-    3-5 iteration call runs as ONE job instead of paying a
-    materialize-and-rescan barrier per iteration; the every-4th cut
-    keeps plan depth bounded for large iteration counts).
+    |edges| not iterations x corpus.
 
-    Dangling nodes (no out-edges) leak their mass, the usual simplified
-    formulation; symmetrize the edge list for the strongly-connected
-    variant. Distributed analog of the reference's iterative collective
-    loops (``distribute/tests/allreduce_test.py``).
-
-    The projected edge frame is materialized ONCE at entry: the degree
-    aggregate, the degree join and the node-set union otherwise each
-    re-evaluate the caller's edge plan (up to 4 evaluations — and the
-    usual symmetrize-by-union caller doubles that), which for the
-    registered consumers is an orders-lineitem join + distinct, or the
-    frequent-bigram graph. 16 bytes/row, and the cut folds into the
-    jobs the prologue runs anyway — same rationale as the edge cut in
-    :func:`connected_components` et al.
+    Jobs: the projected edge frame, the degree-joined edges and the node
+    set are each cut eagerly at entry; the degree aggregate, the degree
+    join and the node-set union otherwise each re-evaluate the caller's
+    edge plan (up to 4 evaluations, and the usual symmetrize-by-union
+    caller doubles that). Ranks are cut every 4th iteration only
+    (round-12: each rank state is consumed exactly once by the next
+    iteration, so the un-checkpointed plan grows LINEARLY — 3 operators
+    per iteration — and the typical 3-5 iteration call runs as ONE job
+    instead of paying a materialize-and-rescan barrier per iteration;
+    the every-4th cut keeps plan depth bounded for large counts).
     """
     e = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d")
@@ -413,10 +409,16 @@ def pagerank(
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    restart = F.lit(1).cast("long")
+    if seeds is not None:
+        nodes = nodes.join(
+            seeds.select("node", F.lit(1).alias("_seed")), "node", "left"
+        ).select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
+        restart = F.col("_seed").cast("long")
+    nodes = nodes.localCheckpoint(eager=True)
     base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
+    ranks = nodes.select("node", (restart * scale).alias("rank"))
     for it in range(iterations):
         contrib = ed.join(
             ranks.select(F.col("node").alias("_s"), "rank"), "_s"
@@ -427,7 +429,7 @@ def pagerank(
         ranks = nodes.join(sums, "node", "left").select(
             "node",
             (
-                F.lit(base)
+                restart * base
                 + F.expr(f"({damping_pct} * coalesce(_sum, 0)) div 100")
             )
             .cast("long")
@@ -436,6 +438,29 @@ def pagerank(
         if (it + 1) % 4 == 0 and it + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
+
+
+def pagerank(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    iterations: int = 3,
+    damping_pct: int = 85,
+    scale: int = 1_000_000_000,
+) -> DataFrame:
+    """Fixed-iteration PageRank over a directed edge list, computed in
+    EXACT integer arithmetic (see :func:`_pagerank_loop`): ranks are
+    BIGINTs at ``scale`` and the damped update is
+    ``((100-d)*scale) div 100 + (d * sum_contrib) div 100``.
+
+    Dangling nodes (no out-edges) leak their mass, the usual simplified
+    formulation; symmetrize the edge list for the strongly-connected
+    variant. Distributed analog of the reference's iterative collective
+    loops (``distribute/tests/allreduce_test.py``).
+    """
+    return _pagerank_loop(
+        edges, src, dst, None, iterations, damping_pct, scale
+    )
 
 
 def personalized_pagerank(
@@ -448,55 +473,48 @@ def personalized_pagerank(
     damping_pct: int = 85,
     scale: int = 1_000_000_000,
 ) -> DataFrame:
-    """Personalized PageRank: identical exact-integer iteration scheme
-    to :func:`pagerank`, but restart mass teleports ONLY to the seed
-    set — ranks measure proximity to the seeds, the recommendation /
-    related-entity primitive (seeds = a user's items -> ranks =
-    candidates). Seeds start at ``scale``; non-seeds at 0; each update
-    adds the ``(100-d)%`` restart only on seed nodes. Same per-round
-    shuffle shape (and round-12 every-4th-iteration lineage-cut policy)
-    as pagerank; nodes never reached by seed mass keep rank 0 (and are
-    still emitted, making the output spine the full node set). The
-    projected edge frame is materialized once at entry, same as
-    :func:`pagerank` (the prologue otherwise re-evaluates the caller's
-    edge plan up to 4 times)."""
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    ed = e.join(deg, "_s").localCheckpoint(eager=True)
+    """Personalized PageRank: the :func:`pagerank` iteration, but
+    restart mass teleports ONLY to the seed set — ranks measure
+    proximity to the seeds, the recommendation / related-entity
+    primitive (seeds = a user's items -> ranks = candidates). Seeds
+    start at ``scale``, non-seeds at 0, and each update adds the
+    ``(100-d)%`` restart only on seed nodes. Nodes never reached by seed
+    mass keep rank 0 and are still emitted: the output spine is the full
+    node set. With every node seeded this is :func:`pagerank`."""
     seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .union(e.select(F.col("_d").alias("node")))
+    return _pagerank_loop(
+        edges, src, dst, seed_nodes, iterations, damping_pct, scale
+    )
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple edge set as ``(a, b)`` with ``a < b``:
+    self-loops dropped, duplicates and reversals deduped, cut eagerly."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter(F.col("a") < F.col("b"))
         .distinct()
-        .join(seed_nodes.select("node", F.lit(1).alias("_seed")), "node", "left")
-        .select("node", F.coalesce("_seed", F.lit(0)).alias("_seed"))
         .localCheckpoint(eager=True)
     )
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.select(
-        "node", (F.col("_seed").cast("long") * scale).alias("rank")
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """Every triangle of the oriented edge set ``e(a, b)`` exactly once,
+    as ``(x, y, z)`` with edges x->y, y->z, x->z: ``(x,y) ⋈ (y,z)``
+    builds wedges on a single node key, ``⋈ (x,z)`` closes them. The
+    wedge fan-out is Σ outdeg(y)² under the orientation."""
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    return (
+        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
+        .select(
+            F.col("e1.a").alias("x"),
+            F.col("e1.b").alias("y"),
+            F.col("e2.b").alias("z"),
+        )
+        .join(e3, (F.col("e3.a") == F.col("x")) & (F.col("e3.b") == F.col("z")))
+        .select("x", "y", "z")
     )
-    for it in range(iterations):
-        contrib = ed.join(
-            ranks.select(F.col("node").alias("_s"), "rank"), "_s"
-        ).select(
-            F.col("_d").alias("node"), F.expr("rank div _deg").alias("_c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("_c").alias("_sum"))
-        ranks = nodes.join(sums, "node", "left").select(
-            "node",
-            (
-                F.col("_seed").cast("long") * base
-                + F.expr(f"({damping_pct} * coalesce(_sum, 0)) div 100")
-            )
-            .cast("long")
-            .alias("rank"),
-        )
-        if (it + 1) % 4 == 0 and it + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
 
 
 def triangle_count(
@@ -506,30 +524,19 @@ def triangle_count(
     orient_by_degree: bool = False,
 ) -> DataFrame:
     """Exact triangle count of an undirected simple graph, as a 1-row
-    DataFrame ``(n_triangles)``. Edges are canonicalized (self-loops
-    dropped, duplicates/reversals deduped) and ORIENTED by a total order
-    on nodes; each triangle is counted exactly once by the ordered wedge
-    join over the oriented adjacency: ``(x,y) ⋈ (y,z)`` builds wedges,
-    ``⋈ (x,z)`` closes them.
+    DataFrame ``(n_triangles)``. Edges are canonicalized and ORIENTED by
+    a total order on nodes, so :func:`_triangles` counts each triangle
+    exactly once.
 
     Scale shape: two equi-joins on single node keys + one count — all
-    partial-agg/AQE-friendly, no cross join. The wedge fan-out is
-    Σ outdeg(y)² under the chosen orientation. ``orient_by_degree=True``
+    partial-agg/AQE-friendly, no cross join. ``orient_by_degree=True``
     orients each edge from the lower-(degree, id) endpoint to the higher
     — the classic compact-forward algorithm whose out-degrees are
     bounded by O(sqrt(|E|)) (graph arboricity), taming the hub blow-up
     of power-law graphs at the cost of one extra degree pass + join.
     The default id order skips that pass (fine for near-uniform degree).
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(
-            F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     if orient_by_degree:
         deg = (
             e.select(F.col("a").alias("n"))
@@ -548,14 +555,7 @@ def triangle_count(
             F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("a"),
             F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("b"),
         ).localCheckpoint(eager=True)
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    wedges = e1.join(e2, F.col("e2.a") == F.col("e1.b")).select(
-        F.col("e1.a").alias("x"), F.col("e1.b").alias("y"), F.col("e2.b").alias("z")
-    )
-    closed = wedges.join(
-        e3, (F.col("e3.a") == F.col("x")) & (F.col("e3.b") == F.col("z"))
-    )
-    return closed.agg(F.count(F.lit(1)).alias("n_triangles"))
+    return _triangles(e).agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def label_propagation(
@@ -680,6 +680,71 @@ def transitive_closure(
     )
 
 
+def _min_plus(
+    sym: DataFrame,
+    seeds: DataFrame,
+    seed_col: str,
+    step: Column,
+    rounds: int,
+    max_dist: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """Multi-source min-plus relaxation (distributed Bellman-Ford) over
+    ``sym(_n, _m[, _w])``: seeds start at distance 0; each round joins
+    the current distances to the edges on ``_n``, offers ``_d + step``
+    to ``_m`` and keeps the per-node minimum. Returns ``(dist,
+    converged)``, where ``dist`` is ``(id, dist)`` of every reached node
+    (typed like ``step``) and ``converged`` says a round changed
+    nothing within ``rounds``. ``max_dist`` prunes offers above it.
+
+    After r rounds every shortest path of at most r EDGES is final.
+    Distances are monotone non-increasing integers, so
+    :func:`_fingerprint` over ``dist`` — count (newly reached nodes) and
+    exact sum — is a convergence measure; the loop stops at the first
+    round that moves neither. Per round: one co-partitioned join + one
+    partial-agg min, never an all-pairs product — the 1000-executor
+    Bellman-Ford shape. Jobs: the seed frame is cut eagerly, then each
+    round is one eager cut and one fingerprint collect.
+
+    Round-12 note: batching TWO relaxations per checkpoint was tried
+    and measured SLOWER (bfs_hops_suppliers 2.7 -> 3.9 s, sssp_suppliers
+    3.8 -> 6.3 s): the relaxed state feeds both the next join and the
+    min-fold union, and without the materialization between rounds that
+    shared subtree is computed twice per relaxation (exchange reuse does
+    not fire across the union/join pair under AQE). One relaxation per
+    checkpoint stands.
+    """
+    zero = F.lit(0).cast(sym.select(step).schema[0].dataType)
+    dist = (
+        seeds.select(F.col(seed_col).alias("id"))
+        .distinct()
+        .select("id", zero.alias("dist"))
+        .localCheckpoint(eager=True)
+    )
+    prev = _fingerprint(dist, F.col("dist"))
+    for _ in range(rounds):
+        relaxed = (
+            sym.join(
+                dist.select(F.col("id").alias("_n"), F.col("dist").alias("_d")),
+                "_n",
+            )
+            .groupBy(F.col("_m").alias("id"))
+            .agg(F.min(F.col("_d") + step).alias("dist"))
+        )
+        if max_dist is not None:
+            relaxed = relaxed.filter(F.col("dist") <= max_dist)
+        dist = (
+            dist.unionByName(relaxed)
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=True)
+        )
+        cur = _fingerprint(dist, F.col("dist"))
+        if cur == prev:
+            return dist, True
+        prev = cur
+    return dist, False
+
+
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -691,71 +756,13 @@ def bfs_distances(
 ) -> DataFrame:
     """Multi-source BFS: (id, dist) = minimum hop count from any seed
     node, for every node within ``max_hops``. Unreached nodes are
-    absent from the result (no sentinel rows).
-
-    Min-plus label propagation: each round joins the frontier's
-    distances to the adjacency list and keeps the per-node minimum —
-    the same join + partial-agg shape as :func:`connected_components`,
-    with lineage cut per round via ``localCheckpoint``. Distances are
-    monotone non-increasing and bounded below, so the exact integer sum
-    of (dist + 1) is a strictly-decreasing convergence measure; the
-    loop stops early once a round changes nothing. Rounds needed =
-    eccentricity of the seed set, each round one co-partitioned join +
-    agg — never an all-pairs product.
-
-    Round-12 note: batching TWO relaxations per checkpoint was tried
-    and measured SLOWER (bfs_hops_suppliers 2.7 -> 3.9 s): the relaxed
-    state feeds both the next join and the min-fold union, and without
-    the per-round materialization that shared subtree runs twice per
-    relaxation. One relaxation per checkpoint stands.
+    absent from the result (no sentinel rows); a node beyond
+    ``max_hops`` is silently left out. :func:`_min_plus` with a unit
+    step, so rounds needed = eccentricity of the seed set; ``dist`` is
+    INT.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(F.col("_m").alias("_n"), F.col("_n").alias("_m"))
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
-    dist = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _measure(d: DataFrame):
-        # count is part of the measure: newly-reached nodes must move it
-        return tuple(
-            d.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-
-    prev = _measure(dist)
-    for _ in range(max_hops):
-        relaxed = (
-            sym.join(
-                dist.select(F.col("id").alias("_n"), F.col("dist").alias("_d")), "_n"
-            )
-            .groupBy(F.col("_m").alias("id"))
-            .agg((F.min("_d") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        cur = _measure(dist)
-        if cur == prev:
-            return dist
-        prev = cur
+    sym = _sym_edges(edges, src, dst, directed)
+    dist, _ = _min_plus(sym, seeds, seed_col, F.lit(1), max_hops)
     return dist
 
 
@@ -770,10 +777,12 @@ def shortest_paths(
     directed: bool = False,
     max_dist: int | None = None,
 ) -> DataFrame:
-    """Multi-source WEIGHTED shortest paths (distributed Bellman-Ford):
-    (id, dist) = minimum total edge weight from any seed, for every node
-    reachable within ``max_rounds`` relaxation rounds. Weights must be
-    non-negative integers; unreached nodes are absent.
+    """Multi-source WEIGHTED shortest paths: (id, dist) = minimum total
+    edge weight from any seed, for every node reachable within
+    ``max_rounds`` relaxation rounds of :func:`_min_plus` (the weighted
+    generalization of :func:`bfs_distances`). Weights must be
+    non-negative integers; ``dist`` is BIGINT; unreached nodes are
+    absent.
 
     ``max_dist`` makes the truncation EXACT instead of hop-bounded:
     relaxations beyond ``max_dist`` are pruned each round (safe — with
@@ -786,76 +795,15 @@ def shortest_paths(
     graph's effective hop diameter. Without ``max_dist``, exhausting
     ``max_rounds`` before the fixed point raises rather than returning
     silently-stale distances.
-
-    The weighted generalization of :func:`bfs_distances`: each round
-    relaxes every edge once (frontier join + per-node min), so after r
-    rounds every shortest path of at most r EDGES is final — exact once
-    ``max_rounds`` reaches the hop-diameter of the relevant paths, and
-    the loop stops early at the fixed point (distances are monotone
-    non-increasing integers, so the exact (count, sum) pair is a
-    convergence measure). Per round: one co-partitioned join + one
-    partial-agg min — never an all-pairs product, the 1000-executor
-    Bellman-Ford shape.
-
-    Round-12 note: batching TWO relaxations per checkpoint was tried
-    and measured SLOWER (sssp_suppliers 3.8 -> 6.3 s): the relaxed
-    state feeds both the next join and the min-fold union, and without
-    the materialization between rounds that shared subtree is computed
-    twice per relaxation (exchange reuse does not fire across the
-    union/join pair under AQE). One relaxation per checkpoint stands.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m"),
-        F.col(weight).cast("long").alias("_w"),
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(
-                F.col("_m").alias("_n"), F.col("_n").alias("_m"), "_w"
-            )
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
-    dist = (
-        seeds.select(F.col(seed_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
+    sym = _sym_edges(
+        edges, src, dst, directed, weight=F.col(weight).cast("long")
     )
-
-    def _measure(d: DataFrame):
-        return tuple(
-            d.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("dist").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-        )
-
-    prev = _measure(dist)
-    for _ in range(max_rounds):
-        relaxed = (
-            sym.join(
-                dist.select(F.col("id").alias("_n"), F.col("dist").alias("_d")),
-                "_n",
-            )
-            .groupBy(F.col("_m").alias("id"))
-            .agg(F.min(F.col("_d") + F.col("_w")).alias("dist"))
-        )
-        if max_dist is not None:
-            relaxed = relaxed.filter(F.col("dist") <= max_dist)
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        cur = _measure(dist)
-        if cur == prev:
-            return dist
-        prev = cur
+    dist, converged = _min_plus(
+        sym, seeds, seed_col, F.col("_w"), max_rounds, max_dist
+    )
+    if converged:
+        return dist
     if max_dist is not None:
         # Exhausted max_rounds without a fixed point. The result is
         # still EXACT iff every distance-<=max_dist path fits in the
@@ -899,17 +847,7 @@ def kcore(
     (all shuffles keyed on node ids), lineage cut per round. Never
     materializes anything bigger than the (shrinking) edge list.
     """
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    e0 = edges.select(
-        F.col(src).alias("_n"), F.col(dst).alias("_m")
-    ).localCheckpoint(eager=True)
-    sym = (
-        e0.union(e0.select(F.col("_m").alias("_n"), F.col("_n").alias("_m")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges, src, dst)
     for _ in range(rounds):
         keep = (
             sym.groupBy("_n")
@@ -970,21 +908,10 @@ def hyperball_reach(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    # materialize the caller's edge plan once before symmetrizing — the
-    # two-direction union would otherwise compute it twice (round-12,
-    # guide §1.2; same cut as connected_components)
-    sym = edges.select(
-        F.col(src).alias("_a"), F.col(dst).alias("_b")
-    ).localCheckpoint(eager=True)
-    if not directed:
-        sym = sym.union(
-            sym.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
-        )
-    sym = sym.distinct().localCheckpoint(eager=True)
-
+    sym = _sym_edges(edges, src, dst, directed)
     nodes = (
-        sym.select(F.col("_a").alias("id"))
-        .union(sym.select(F.col("_b").alias("id")))
+        sym.select(F.col("_n").alias("id"))
+        .union(sym.select(F.col("_m").alias("id")))
         .distinct()
     )
     # one-hot init: node's own (reg, rho) as a single set bit. (reg,
@@ -1023,8 +950,8 @@ def hyperball_reach(
 
     bcols = [f"_b{j}" for j in range(n_longs)]
     for r in range(k):
-        prop = sym.join(state.withColumnRenamed("id", "_a"), "_a").select(
-            F.col("_b").alias("id"), *bcols
+        prop = sym.join(state.withColumnRenamed("id", "_n"), "_n").select(
+            F.col("_m").alias("id"), *bcols
         )
         state = (
             state.unionByName(prop)
@@ -1098,38 +1025,17 @@ def clustering_coefficient(
     Strogatz '98), the per-node refinement of :func:`triangle_count`'s
     global numerator.
 
-    Edges canonicalize to the oriented ``a < b`` form, the ordered
-    wedge join enumerates each triangle exactly once as ``x < y < z``,
-    and each triangle credits all three corners (one explode of 3 rows
-    per triangle + a node-keyed partial agg). Degrees come from the
-    deduped edge list. Both statistics are exact integers; the
-    coefficient is one fixed-shape division, NULL for degree < 2
-    (undefined, and guarded so ANSI mode cannot abort).
-
-    Scale shape: two equi-joins on single node keys (the same
-    compact-forward wedge plan as ``triangle_count``) plus two
-    node-keyed aggs — no cross join, no per-node neighbor lists
+    :func:`_triangles` over the ``a < b`` edges enumerates each
+    triangle exactly once as ``x < y < z``, and each triangle credits
+    all three corners (one explode of 3 rows per triangle + a node-keyed
+    partial agg). Degrees come from the deduped edge list. Both
+    statistics are exact integers; the coefficient is one fixed-shape
+    division, NULL for degree < 2 (undefined, and guarded so ANSI mode
+    cannot abort). No cross join, no per-node neighbor lists
     materialized. Returns (id, degree, triangles, lcc).
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-        .join(e3, (F.col("e3.a") == F.col("x")) & (F.col("e3.b") == F.col("z")))
-        .select("x", "y", "z")
-    )
-    contrib = tri.select(
+    e = _canonical_edges(edges, src, dst)
+    contrib = _triangles(e).select(
         F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("id")
     )
     tcount = contrib.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
@@ -1181,13 +1087,7 @@ def link_prediction(
     Returns (id_a, id_b, common, jaccard, pref_attach) for non-edges
     with ``common >= min_common``.
     """
-    a, b = F.col(src), F.col(dst)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     adj = e.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("z"), F.col("a").alias("n"))
     )

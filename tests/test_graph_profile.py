@@ -119,6 +119,8 @@ def test_triangle_count_degree_orientation_same_count(spark):
 def test_pagerank_random_graphs_match_reference(spark):
     import random
 
+    from hybridbackend_spark.operators.graph import personalized_pagerank
+
     for seed in (3, 17):
         rng = random.Random(seed)
         edges = list(
@@ -133,38 +135,45 @@ def test_pagerank_random_graphs_match_reference(spark):
         assert got == _expected_pagerank(
             edges, iterations=4, damping_pct=80
         ), f"seed {seed}"
+        # every node a seed: personalized PageRank is PageRank
+        seeds = spark.createDataFrame(
+            [(n,) for n in {n for e in edges for n in e}], "id long"
+        )
+        ppr = {
+            r["node"]: r["rank"]
+            for r in personalized_pagerank(
+                df, seeds, iterations=4, damping_pct=80
+            ).collect()
+        }
+        assert ppr == got, f"seed {seed}"
 
 
 def test_connected_components_fast_pairwise_one_pass(spark):
     """Pure 2-node components: the one-pass min-neighbor labeling is
-    exact and must match the iterative algorithm."""
-    from hybridbackend_spark.operators.graph import (
-        connected_components,
-        connected_components_fast,
-    )
+    already consistent on every edge, so connected_components returns
+    it without propagating."""
+    from hybridbackend_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 11), (2, 12), (3, 13), (40, 4)], "id_a long, id_b long"
     )
-    fast = {(r.id, r.component)
-            for r in connected_components_fast(edges).collect()}
-    slow = {(r.id, r.component)
-            for r in connected_components(edges).collect()}
-    assert fast == slow
-    assert (11, 1) in fast and (40, 4) in fast
+    got = {(r.id, r.component)
+           for r in connected_components(edges).collect()}
+    assert got == {(1, 1), (11, 1), (2, 2), (12, 2), (3, 3), (13, 3),
+                   (4, 4), (40, 4)}
 
 
 def test_connected_components_fast_chain_falls_back(spark):
     """A 4-node chain breaks the one-pass labeling (label(4)=3 but
     label(3)=2): the consistency check must detect it and fall back to
-    the full algorithm, labeling the whole chain 1."""
-    from hybridbackend_spark.operators.graph import connected_components_fast
+    propagation, labeling the whole chain 1."""
+    from hybridbackend_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (9, 19)], "id_a long, id_b long"
     )
     got = {(r.id, r.component)
-           for r in connected_components_fast(edges).collect()}
+           for r in connected_components(edges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (9, 9), (19, 9)}
 
 
@@ -399,10 +408,30 @@ def test_shortest_paths_matches_bfs_on_unit_weights(spark):
         "id_a long, id_b long, w long",
     )
     seeds = spark.createDataFrame([(0,)], "id long")
-    sp = {r.id: r.dist for r in shortest_paths(edges, seeds).collect()}
+    for directed in (False, True):
+        sp = {
+            r.id: r.dist
+            for r in shortest_paths(edges, seeds, directed=directed).collect()
+        }
+        bf = {
+            r.id: r.dist
+            for r in bfs_distances(
+                edges, seeds, max_hops=10, directed=directed
+            ).collect()
+        }
+        assert sp == bf, directed
+    # max_hops shorter than the chain: bfs truncates silently, and the
+    # distance-bounded shortest_paths returns the same rows
+    seeds = spark.createDataFrame([(5,)], "id long")
     bf = {r.id: r.dist
-          for r in bfs_distances(edges, seeds, max_hops=10).collect()}
-    assert sp == bf
+          for r in bfs_distances(edges, seeds, max_hops=2).collect()}
+    sp = {
+        r.id: r.dist
+        for r in shortest_paths(
+            edges, seeds, max_rounds=2, max_dist=2
+        ).collect()
+    }
+    assert sp == bf == {5: 0, 4: 1, 6: 1, 0: 1, 3: 2, 7: 2, 1: 2}
 
 
 def test_kcore_triangle_plus_tail(spark):
@@ -659,3 +688,72 @@ def test_link_prediction_max_degree_drops_hub_evidence(spark):
     assert (
         link_prediction(df, "id_a", "id_b", max_degree=4).count() == 0
     )
+
+
+
+# Jobs launched by build + collect of each iterative graph operator on
+# one fixed graph: a 5-node chain (forces the propagation fallback in
+# connected_components), a 4-leaf star and an isolated pair. Counted
+# with AQE off: AQE's runtime re-planning launches a varying number of
+# map-stage and broadcast jobs (+-2 per call), while without it every
+# job is one of the operator's eager actions (lineage cuts, convergence
+# collects) or the final collect, so a moved cut changes a count.
+GRAPH_LOOP_JOBS = {
+    "connected_components": 12,
+    "connected_components_star": 8,
+    "bfs_distances": 15,
+    "shortest_paths": 15,
+    "pagerank": 4,
+    "personalized_pagerank": 4,
+    "kcore": 5,
+    "hyperball_reach": 5,
+}
+
+
+def test_graph_loop_job_counts_pinned(spark):
+    import uuid
+
+    from hybridbackend_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 2) for i in range(1, 5)]
+        + [(10, i, 1) for i in range(11, 15)]
+        + [(20, 21, 3)],
+        "id_a long, id_b long, w long",
+    )
+    seeds = spark.createDataFrame([(1,), (10,)], "id long")
+    calls = {
+        "connected_components": lambda: graph.connected_components(edges),
+        "connected_components_star": lambda: graph.connected_components_star(
+            edges
+        ),
+        "bfs_distances": lambda: graph.bfs_distances(edges, seeds),
+        "shortest_paths": lambda: graph.shortest_paths(edges, seeds),
+        "pagerank": lambda: graph.pagerank(edges, "id_a", "id_b"),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            edges, seeds, "id_a", "id_b"
+        ),
+        "kcore": lambda: graph.kcore(edges, k=2, rounds=2),
+        "hyperball_reach": lambda: graph.hyperball_reach(edges, k=2),
+    }
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    uid = uuid.uuid4().hex
+    got = {}
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, call in calls.items():
+            group = f"graph-jobs-{uid}-{name}"
+            sc.setJobGroup(group, name)
+            try:
+                call().collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            bus.waitUntilEmpty()
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got == GRAPH_LOOP_JOBS
+
