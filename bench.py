@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -406,6 +407,17 @@ SCANS = {
 }
 
 
+def _master_cores(sc) -> int:
+    """Cores of the resolved master (``local``, ``local[4]``,
+    ``local[*]``, ``local[4,2]``); other masters report the default
+    parallelism."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", sc.master)
+    if not m:
+        return sc.defaultParallelism
+    n = m.group(1)
+    return 1 if n is None else os.cpu_count() if n == "*" else int(n)
+
+
 def _run_noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -733,8 +745,9 @@ def main() -> None:
         # 32-core timings tripped a spurious suspect_cpus_ignored in r12
         # (the contract was honored: master below proves it). Headline
         # scaling should be read at a SF where compute dominates
-        # (bench_scale.py's growth curves are that measurement).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # (bench_scale.py's growth curves are that measurement). Parsed
+        # from the master itself, so it cannot drift from the session.
+        "cpus": _master_cores(spark.sparkContext),
         "master": spark.sparkContext.master,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "aqe": spark.conf.get("spark.sql.adaptive.enabled"),

@@ -5,15 +5,20 @@ The reference computes these as streaming accumulators merged across
 workers with allreduce (``metrics/mean.py:36-128``, ``metrics/accuracy.py``,
 ``metrics/auc.py:38-186``, ``metrics/gauc.cc:39-66``). In Spark the
 partial/final split of ``AggregateExec`` IS the allreduce: every metric
-below is a plain aggregation with map-side partial combine, no driver-side
-loops, no UDFs.
+below is a plain aggregation with map-side partial combine, no UDFs and
+no driver round trip. Building a metric's DataFrame runs no Spark job,
+so a consumer that fetches several metrics of one input in one query
+runs the input's pipeline once (Spark reuses the shared exchanges).
 
 AUC uses the exact rank statistic rather than the reference's
 thresholded confusion-matrix approximation: group by distinct score,
 cumulative-count sweep, ties credited 1/2 (equivalent to the trapezoidal
 ROC integral over all distinct thresholds — the limit the reference's
-``num_thresholds`` histogram approximates). A histogram variant matching
-the reference's bucketed estimate is provided for parity
+``num_thresholds`` histogram approximates). The sweep is a lazy
+distributed prefix sum: range partitions exchange their totals with
+each other inside the plan (at most parts²/2 extra rows), with no
+driver collect and no checkpoint. A histogram variant matching the
+reference's bucketed estimate is provided for parity
 (``auc_histogram``).
 """
 
@@ -52,71 +57,85 @@ def auc(df: DataFrame, label: str, score: str, alias: str = "auc") -> DataFrame:
 
     Plan shape: one partial+final aggregation on distinct scores (map-side
     combine shrinks the shuffle to |distinct scores|), then a DISTRIBUTED
-    prefix sum over the score histogram: range-partition by score,
-    partition-local cumulative sums, plus per-partition offsets (one tiny
-    driver collect bounded by the partition count, not data size). A naive
+    prefix sum over the score histogram (:func:`_distributed_prefix_sum`):
+    range-partition by score, partition-local cumulative sums, and
+    per-partition offsets that the partitions send each other through an
+    exchange — at most parts²/2 extra rows for ``parts`` =
+    ``spark.sql.shuffle.partitions``, with no driver collect and no
+    checkpoint, so building the result runs no Spark job. A naive
     global-order window would drag the whole histogram through a single
     partition — the classic scale trap this avoids; at 100 TB with
     continuous scores the histogram is row-count-sized.
+
+    A single-class or empty input yields a 1-row NULL, as in
+    :func:`auc_histogram`: the statistic is undefined there.
     """
     hist = _score_histogram(df, label, score)
     swept = _distributed_prefix_sum(hist, "_s", "_n", "_n_below")
+    pairs = F.sum("_p") * F.sum("_n")
     return swept.agg(
-        (
-            F.sum(F.col("_p") * (F.col("_n_below") + F.col("_n") / 2))
-            / (F.sum("_p") * F.sum("_n"))
+        F.when(
+            pairs > 0,
+            F.sum(F.col("_p") * (F.col("_n_below") + F.col("_n") / 2)) / pairs,
         ).alias(alias)
     )
 
 
 def _distributed_prefix_sum(
-    df: DataFrame, order_col: str, value_col: str, out_col: str,
-    checkpoint: bool = True,
+    df: DataFrame, order_col: str, value_col: str, out_col: str
 ) -> DataFrame:
     """``out = sum(value) over rows strictly before this one in order_col``
-    without a single-partition window: range-partition on the order column,
-    local exclusive cumsum inside each partition, then add the prefix of
-    whole-partition totals (collected to the driver — bounded by the
-    partition count). ``checkpoint=False`` skips the eager materialization
-    (plan-inspection/testing only: the offsets are then not guaranteed to
-    match a recomputed layout)."""
-    from pyspark.sql import Window as W
+    without a single-partition window, as one lazy plan:
 
+    1. range-partition on the order column; ``_pid`` is the partition id;
+    2. windows on ``_pid``: the local exclusive cumsum and the
+       partition's total;
+    3. the partition's first row sends that total to every later
+       partition id in the same ``explode`` that passes the row through
+       (at most parts²/2 extra rows). The target column is named ``_pid``
+       too, so every window here partitions by ``_pid``;
+    4. a window on the target ``_pid`` sums the totals sent to it — the
+       partition's offset — and the sent rows are dropped.
+
+    The range exchange is referenced once, so the offsets always match
+    the layout the rows were read with, even on recompute."""
     parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
+    by_pid = Window.partitionBy("_pid")
+    in_pid = by_pid.orderBy(order_col)
+    local = (
+        df.repartitionByRange(parts, F.col(order_col))
+        .withColumn("_pid", F.spark_partition_id())
+        .select(
+            "*",
+            F.coalesce(
+                F.sum(value_col).over(
+                    in_pid.rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0.0),
+            ).alias("_local_below"),
+            F.sum(value_col).over(by_pid).alias("_total"),
+            F.row_number().over(in_pid).alias("_rn"),
+        )
     )
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, -1)
+    routed = local.select(
+        *df.columns, "_local_below", "_total",
+        F.col("_pid").alias("_src"),
+        F.explode(
+            F.when(
+                F.col("_rn") == 1, F.sequence("_pid", F.lit(parts - 1))
+            ).otherwise(F.array("_pid"))
+        ).alias("_pid"),
     )
-    local = ranged.withColumn(
-        "_local_below", F.coalesce(F.sum(value_col).over(w_local), F.lit(0.0))
+    offset = F.sum(
+        F.when(F.col("_pid") > F.col("_src"), F.col("_total"))
+    ).over(by_pid)
+    return (
+        routed.withColumn(
+            out_col, F.col("_local_below") + F.coalesce(offset, F.lit(0.0))
+        )
+        .filter(F.col("_pid") == F.col("_src"))
+        .select(*df.columns, out_col)
     )
-    # Eager localCheckpoint, not persist: the offsets collected below must
-    # see the exact partition layout the downstream plan reads (range
-    # sampling could differ on recompute), and checkpoint blocks are freed
-    # when the DataFrame is dropped — cache entries would leak for the
-    # session lifetime.
-    if checkpoint:
-        local = local.localCheckpoint(eager=True)
-    totals = dict(
-        local.groupBy("_pid").agg(F.sum(value_col).alias("_t")).collect()
-    )
-    offsets, acc = {}, 0.0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += float(totals[pid] or 0.0)
-    offset_expr = F.element_at(
-        F.create_map(
-            *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-        ),
-        F.col("_pid"),
-    ) if offsets else F.lit(0.0)
-    return local.withColumn(
-        out_col, F.col("_local_below") + F.coalesce(offset_expr, F.lit(0.0))
-    ).drop("_pid", "_local_below")
 
 
 def auc_histogram(
@@ -155,28 +174,25 @@ def auc_histogram(
     w_desc = Window.orderBy(F.col("_b").desc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
+    # class totals as a 1-row aggregate joined into the plan. Degenerate
+    # inputs leave the curve undefined: an EMPTY frame sums to NULL, and
+    # PR needs positives, ROC needs both classes. ``ok`` turns them into
+    # a 1-row NULL instead of letting the /P (or /N) ANSI-abort the job.
+    totals = hist.agg(F.sum("_p").alias("_pos"), F.sum("_n").alias("_neg"))
     swept = (
         hist.withColumn("_tp", F.sum("_p").over(w_desc))
         .withColumn("_fp", F.sum("_n").over(w_desc))
+        .crossJoin(F.broadcast(totals))
     )
-    total = swept.agg(
-        F.sum("_p").alias("_P"), F.sum("_n").alias("_N")
-    ).collect()[0]
-    # degenerate inputs: an EMPTY frame sums to NULL (float(None) would
-    # TypeError), and a single-class frame makes the curve undefined —
-    # PR needs positives, ROC needs both classes. Return a 1-row NULL
-    # instead of letting the /P (or /N) ANSI-abort the job downstream.
-    P, N = float(total["_P"] or 0.0), float(total["_N"] or 0.0)
-    if P <= 0 or (curve == "ROC" and N <= 0):
-        return df.sparkSession.range(1).select(
-            F.lit(None).cast("double").alias(alias)
-        )
+    P, N = F.col("_pos"), F.col("_neg")
+    ok = P > 0 if curve == "PR" else (P > 0) & (N > 0)
     if curve == "PR":
         # pair each non-empty bucket with the next higher one (empty
         # buckets have zero deltas and contribute nothing, so skipping
         # them is exact); beyond the top bucket tp = fp = 0
         w_asc = Window.orderBy("_b")
         pairs = swept.select(
+            "_pos",
             F.col("_tp").alias("_tp1"),
             (F.col("_tp") + F.col("_fp")).alias("_p1"),
             F.coalesce(F.lead("_tp").over(w_asc), F.lit(0.0)).alias("_tp2"),
@@ -192,11 +208,12 @@ def auc_histogram(
             (F.col("_p1") > 0) & (F.col("_p2") > 0),
             F.log(F.col("_p1") / F.col("_p2")),
         ).otherwise(F.lit(0.0))
-        term = slope * (dtp + intercept * log_ratio) / F.lit(P)
+        term = F.when(ok, slope * (dtp + intercept * log_ratio) / P)
         return pairs.agg(F.sum(term).alias(alias))
     pts = (
         swept.select(
-            (F.col("_tp") / P).alias("tpr"), (F.col("_fp") / N).alias("fpr")
+            F.when(ok, F.col("_tp") / P).alias("tpr"),
+            F.when(ok, F.col("_fp") / N).alias("fpr"),
         )
         .orderBy("fpr", "tpr")
     )

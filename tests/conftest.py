@@ -19,3 +19,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(call)`` runs ``call()`` under a fresh job group and
+    returns how many Spark jobs it launched, read from the status
+    tracker once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def count(call) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -710,9 +710,7 @@ GRAPH_LOOP_JOBS = {
 }
 
 
-def test_graph_loop_job_counts_pinned(spark):
-    import uuid
-
+def test_graph_loop_job_counts_pinned(spark, count_jobs):
     from hybridbackend_spark.operators import graph
 
     edges = spark.createDataFrame(
@@ -736,23 +734,13 @@ def test_graph_loop_job_counts_pinned(spark):
         "kcore": lambda: graph.kcore(edges, k=2, rounds=2),
         "hyperball_reach": lambda: graph.hyperball_reach(edges, k=2),
     }
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    uid = uuid.uuid4().hex
-    got = {}
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for name, call in calls.items():
-            group = f"graph-jobs-{uid}-{name}"
-            sc.setJobGroup(group, name)
-            try:
-                call().collect()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            bus.waitUntilEmpty()
-            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        got = {
+            name: count_jobs(lambda: call().collect())
+            for name, call in calls.items()
+        }
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert got == GRAPH_LOOP_JOBS

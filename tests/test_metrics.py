@@ -33,11 +33,20 @@ def test_accuracy(spark):
 
 
 def test_auc_exact(spark):
+    # the prefix sum range-partitions into shuffle.partitions parts; at 64
+    # some of them are empty (about 100 distinct scores)
     random.seed(0)
     pairs = [(random.randint(0, 1), round(random.random(), 2)) for _ in range(300)]
     df = spark.createDataFrame(pairs, "y: int, s: double")
-    got = auc(df, "y", "s").collect()[0]["auc"]
-    assert got == pytest.approx(_sklearn_free_auc(pairs), abs=1e-12)
+    expect = _sklearn_free_auc(pairs)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 7, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            got = auc(df, "y", "s").collect()[0]["auc"]
+            assert got == pytest.approx(expect, abs=1e-12), parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def test_auc_perfect_and_inverted(spark):
@@ -59,7 +68,8 @@ def test_auc_histogram_converges(spark):
 def test_auc_histogram_degenerate_single_class_and_empty(spark):
     """Single-class and empty inputs return a 1-row NULL instead of
     ANSI-aborting on the /P (or /N) normalization — PR needs positives,
-    ROC needs both classes, and an empty frame sums to NULL totals."""
+    ROC needs both classes, and an empty frame sums to NULL totals. The
+    exact ``auc`` needs both classes too."""
     from hybridbackend_spark.functions.metrics import auc_histogram
 
     all_neg = spark.createDataFrame(
@@ -76,6 +86,30 @@ def test_auc_histogram_degenerate_single_class_and_empty(spark):
     # all-positive: PR is undefined-free (P > 0) but ROC lacks negatives
     rows = auc_histogram(all_pos, "y", "s", curve="ROC").collect()
     assert len(rows) == 1 and rows[0]["auc"] is None
+    # the exact AUC has the same contract
+    for df in (all_neg, all_pos, empty):
+        rows = auc(df, "y", "s").collect()
+        assert len(rows) == 1 and rows[0]["auc"] is None
+
+
+def test_auc_builds_without_jobs(spark, count_jobs):
+    """Building auc, auc_histogram and gauc launches no Spark job: their
+    prefix sums and class totals stay inside the lazy plan, so a consumer
+    query that fetches several metrics runs the input pipeline once."""
+    random.seed(3)
+    rows = [
+        (random.randint(0, 3), random.randint(0, 1), round(random.random(), 2))
+        for _ in range(200)
+    ]
+    df = spark.createDataFrame(rows, "g: int, y: int, s: double")
+    calls = {
+        "auc": lambda: auc(df, "y", "s"),
+        "auc_histogram_roc": lambda: auc_histogram(df, "y", "s"),
+        "auc_histogram_pr": lambda: auc_histogram(df, "y", "s", curve="PR"),
+        "gauc": lambda: gauc(df, "g", "y", "s"),
+    }
+    got = {name: count_jobs(call) for name, call in calls.items()}
+    assert got == dict.fromkeys(calls, 0)
 
 
 def test_gauc(spark):

@@ -78,8 +78,6 @@ def test_filter_pushdown_reaches_parquet(spark, sf_dir):
 
 def test_auc_no_global_window(spark, sf_dir):
     # the AUC sweep must range-partition, not funnel through one partition
-    # (checkpoint=False keeps the sweep lineage visible for inspection; the
-    # production path eagerly checkpoints the identical plan)
     from hybridbackend_spark.functions.metrics import (
         _distributed_prefix_sum,
         _score_histogram,
@@ -90,8 +88,7 @@ def test_auc_no_global_window(spark, sf_dir):
         "cast(event_id % 2 as double) as label", "value as score"
     )
     swept = _distributed_prefix_sum(
-        _score_histogram(ev, "label", "score"), "_s", "_n", "_n_below",
-        checkpoint=False,
+        _score_histogram(ev, "label", "score"), "_s", "_n", "_n_below"
     )
     plan = physical_plan(swept)
     assert "rangepartitioning" in plan
