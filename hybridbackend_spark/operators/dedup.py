@@ -14,6 +14,15 @@ Scale design notes (the point of each algorithm at 100 TB):
   per-pair common counts out of the join's groupBy; ``max_df`` caps
   heavy-tail shingles at extreme scale.
 - embedding cosine: exact within LSH/IVF buckets — see similarity module.
+  :func:`cosine_near_dup_pairs` and :func:`semantic_dedup` /
+  :func:`semantic_dedup_tree` share one private helper per step:
+  ``_dvec_rows`` (double cast; on the IVF arms, the centroid-width
+  guard), ``_shard_cap`` (the md5 shard split of oversized cells),
+  ``_int8_sketch`` + ``_int8_bound`` (the int8 unit-vector sketch and
+  its provable cosine margin), and ``_verified_pairs`` (re-join both
+  sides' doubles and score the 6-dp guarded cosine,
+  ``similarity._cos_from_norms``). The IVF arm probes cells with
+  ``similarity._probe_cells``.
 
 Everything is expression-level: no Python UDFs at all.
 MinHash permutations use the affine trick: h_k(x) = (a_k * x + b_k) mod p
@@ -23,7 +32,7 @@ affine maps (standard MinHash construction, cf. Broder '97).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -784,8 +793,11 @@ def cosine_near_dup_pairs(
     only pairs sharing a bucket in SOME table are compared — the scale
     path. Recall per pair is 1-(1-p^k)^T with p = 1-theta/pi; tune k down
     or T up to raise recall. ``dim`` must match the embedding
-    dimensionality (raises per-row otherwise — a mismatch would silently
-    degenerate bucketing to one bucket).
+    dimensionality on the LSH arm, which raises per row otherwise (a
+    mismatch would silently degenerate bucketing to one bucket); the
+    IVF arm raises on a vector whose length is not the centroid width.
+    The all-pairs arm (``bucket_bits = 0``) ignores ``dim``: a pair of
+    unequal lengths scores a NULL cosine and is never emitted.
 
     Scale shape: the self-join shuffles only (id, table, bucket) rows —
     vectors are re-joined afterwards for the surviving candidates, so
@@ -843,213 +855,30 @@ def cosine_near_dup_pairs(
     cells stay under the cap when recall matters; ``None`` disables.
     """
     from .similarity import (
+        _cos_from_norms,
+        _probe_cells,
         _resolve_ann_strategy,
-        dot,
+        kmeans_train,
         l2_norm,
         random_hyperplane_key,
     )
 
     use_int8 = _resolve_int8_filter(int8_filter, dim) and bucket_bits > 0
-
+    resolved = _resolve_ann_strategy(blocking, dim) if bucket_bits > 0 else None
+    if resolved == "ivf" and centroids is None:
+        centroids = kmeans_train(
+            df.select(F.col(id_col), F.col(vec_col)),
+            vec_col,
+            k=ivf_k,
+            iters=kmeans_iters,
+            id_col=id_col,
+        )
     # norm precomputed once per vector (bit-identical to the inline form,
     # which would recompute it per candidate pair)
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    v = _dvec_rows(
+        df, vec_col, id_col, len(centroids[0]) if resolved == "ivf" else None
     ).withColumn("_nrm", l2_norm(F.col("_v")))
-    if bucket_bits > 0:
-        resolved = _resolve_ann_strategy(blocking, dim)
-        if resolved == "ivf":
-            from .similarity import _argmin_pairs_sql, kmeans_train
-
-            if centroids is None:
-                centroids = kmeans_train(
-                    df.select(F.col(id_col), F.col(vec_col)),
-                    vec_col,
-                    k=ivf_k,
-                    iters=kmeans_iters,
-                    id_col=id_col,
-                )
-            # n_probe nearest cells per vector, rendered as ONE parsed
-            # SQL expression (the round-12 change-21 pattern — zero
-            # py4j round trips for the k x dim centroid literals)
-            probe = F.expr(
-                "transform(slice(array_sort("
-                f"{_argmin_pairs_sql('`_v`', centroids)}"
-                f"), 1, {int(n_probe)}), s -> s.i)"
-            )
-            keyed = v.select(
-                F.col(id_col), F.explode(probe).alias("_bkt")
-            )
-            if max_cell_rows is not None:
-                if max_cell_rows < 1:
-                    raise ValueError("max_cell_rows must be >= 1")
-                counts = keyed.groupBy("_bkt").agg(
-                    F.count(F.lit(1)).alias("_cn")
-                )
-                keyed = (
-                    keyed.join(F.broadcast(counts), "_bkt")
-                    .withColumn(
-                        "_nsh",
-                        F.expr(
-                            f"CAST((_cn + {max_cell_rows - 1}) DIV "
-                            f"{max_cell_rows} AS INT)"
-                        ),
-                    )
-                    .withColumn(
-                        "_sh",
-                        F.pmod(
-                            F.conv(
-                                F.substring(
-                                    F.md5(F.col(id_col).cast("string")),
-                                    1,
-                                    4,
-                                ),
-                                16,
-                                10,
-                            ).cast("int"),
-                            F.col("_nsh"),
-                        ),
-                    )
-                    .select(F.col(id_col), "_bkt", "_sh")
-                )
-            else:
-                keyed = keyed.withColumn("_sh", F.lit(0))
-        else:
-            keys = [
-                random_hyperplane_key("_v", bucket_bits, seed + t, dim)
-                for t in range(n_tables)
-            ]
-            keyed = v.select(
-                F.col(id_col),
-                F.posexplode(F.array(*keys)).alias("_tbl", "_bkt"),
-            )
-        a, b = keyed.alias("a"), keyed.alias("b")
-        same_block = F.col("a._bkt") == F.col("b._bkt")
-        if resolved == "ivf":
-            same_block = same_block & (F.col("a._sh") == F.col("b._sh"))
-        else:
-            same_block = same_block & (F.col("a._tbl") == F.col("b._tbl"))
-        pairs = (
-            a.join(
-                b,
-                same_block & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        if use_int8:
-            # int8 sketch per id: the UNIT vector quantized to bytes
-            # plus its per-vector scale — identical construction and
-            # guards to _semantic_dedup_cells (zero/NaN norms quantize
-            # to all-zero and take the always-pass margin, so corrupt
-            # vectors fall through to the exact verify, which NULLs
-            # their cosine; they can never be pruned OR pass early)
-            nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
-            u = F.transform(
-                F.col("_v"),
-                lambda x: F.when(nrm_ok, x / F.col("_nrm")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-            lite = v.withColumn("_u", u).withColumn(
-                "_s", F.array_max(F.transform(F.col("_u"), F.abs))
-            )
-            q8 = F.when(
-                (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
-                F.transform(
-                    F.col("_u"),
-                    lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
-                ),
-            ).otherwise(
-                F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte"))
-            )
-            # materialize the per-id sketch ONCE: projection collapse
-            # would otherwise inline the _s subtree (array_max over the
-            # unit vector) into q8's per-element lambda — a dim^2 blowup
-            # per row — and re-evaluate the whole sketch on both sides
-            # of the pair join. Bounded: n x (dim + 16) bytes.
-            lite = lite.select(
-                F.col(id_col), F.col("_s"), q8.alias("_q")
-            ).localCheckpoint(eager=True)
-            sk = pairs.join(
-                lite.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col("_s").alias("_sa"),
-                    F.col("_q").alias("_qa"),
-                ),
-                "id_a",
-            ).join(
-                lite.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_s").alias("_sb"),
-                    F.col("_q").alias("_qb"),
-                ),
-                "id_b",
-            )
-            dq = F.aggregate(
-                F.zip_with(
-                    F.col("_qa"),
-                    F.col("_qb"),
-                    lambda x, y: x.cast("int") * y.cast("int"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).cast("double")
-            sa, sb = F.col("_sa"), F.col("_sb")
-            d_w = F.size(F.col("_qa")).cast("double")
-            approx = dq * sa * sb / F.lit(127.0 * 127.0)
-            # margin covers the quantization error bound plus the
-            # exact verify's 6-dp half-up rounding slack (5e-7); the
-            # 2.0 branch makes zero/NaN-scale rows an always-pass
-            # (cos is in [-1, 1]) — NaN approx also lands there via
-            # the isnan() terms, so Spark's NaN-orders-above-all
-            # comparison semantics can't sneak a corrupt pair past
-            margin = F.when(
-                (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb),
-                F.lit(2.0),
-            ).otherwise(
-                F.sqrt(d_w) * (sa + sb) / F.lit(254.0)
-                + d_w * sa * sb / F.lit(254.0 * 254.0)
-                + F.lit(5e-7)
-            )
-            pairs = sk.filter(approx >= F.lit(threshold) - margin).select(
-                "id_a", "id_b"
-            )
-        joined = pairs.join(
-            v.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_v").alias("_va"),
-                F.col("_nrm").alias("_na"),
-            ),
-            "id_a",
-        ).join(
-            v.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_v").alias("_vb"),
-                F.col("_nrm").alias("_nb"),
-            ),
-            "id_b",
-        )
-        scored = joined.select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.when(
-                    F.col("_na") * F.col("_nb") != 0,
-                    F.nanvl(
-                        dot(F.col("_va"), F.col("_vb"))
-                        / (F.col("_na") * F.col("_nb")),
-                        F.lit(None).cast("double"),
-                    ),
-                ),
-                6,
-            ).alias("cos"),
-        )
-    else:
+    if resolved is None:
         a, b = v.alias("a"), v.alias("b")
         scored = (
             a.crossJoin(b)
@@ -1058,19 +887,67 @@ def cosine_near_dup_pairs(
                 F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"b.{id_col}").alias("id_b"),
                 F.round(
-                    F.when(
-                        F.col("a._nrm") * F.col("b._nrm") != 0,
-                        F.nanvl(
-                            dot(F.col("a._v"), F.col("b._v"))
-                            / (F.col("a._nrm") * F.col("b._nrm")),
-                            F.lit(None).cast("double"),
-                        ),
+                    _cos_from_norms(
+                        F.col("a._v"),
+                        F.col("b._v"),
+                        F.col("a._nrm"),
+                        F.col("b._nrm"),
                     ),
                     6,
                 ).alias("cos"),
             )
         )
-    return scored.filter(F.col("cos") >= threshold)
+        return scored.filter(F.col("cos") >= threshold)
+    if resolved == "ivf":
+        # a block is (probed cell, md5 shard of the id)
+        keyed = _shard_cap(
+            v.select(
+                F.col(id_col),
+                F.explode(_probe_cells("`_v`", centroids, n_probe)).alias(
+                    "_bkt"
+                ),
+            ),
+            "_bkt",
+            id_col,
+            max_cell_rows,
+        )
+        sub = "_sh"
+    else:
+        # a block is (table, bucket)
+        keys = [
+            random_hyperplane_key("_v", bucket_bits, seed + t, dim)
+            for t in range(n_tables)
+        ]
+        keyed = v.select(
+            F.col(id_col),
+            F.posexplode(F.array(*keys)).alias("_tbl", "_bkt"),
+        )
+        sub = "_tbl"
+    a, b = keyed.alias("a"), keyed.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a._bkt") == F.col("b._bkt"))
+            & (F.col(f"a.{sub}") == F.col(f"b.{sub}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )
+    if use_int8:
+        # prune candidates the int8 bound proves below threshold before
+        # re-joining the double vectors (zero/NaN norms take the
+        # always-pass margin and fall through to the exact verify,
+        # which NULLs their cosine)
+        sk = _join_sides(pairs, _int8_sketch(v, id_col), id_col, "_s", "_q")
+        approx, margin = _int8_bound("_qa", "_qb", "_sa", "_sb")
+        pairs = sk.filter(approx >= F.lit(threshold) - margin).select(
+            "id_a", "id_b"
+        )
+    return _verified_pairs(pairs, v, id_col).filter(F.col("cos") >= threshold)
 
 
 def blocked_levenshtein_pairs(
@@ -1204,6 +1081,160 @@ def _resolve_int8_filter(int8_filter: bool | str, dim: int) -> bool:
     )
 
 
+def _dvec_rows(
+    df: DataFrame, vec_col: str, id_col: str, width: int | None = None
+) -> DataFrame:
+    """(id_col, _v) rows with the vector cast to array<double>. With a
+    ``width`` (the IVF arms pass the centroid width) a vector of another
+    length raises: ``zip_with`` would pad it with NULLs, the argmin would
+    give it a cell from NULL distances, and its pairs would vanish
+    without an error. NULL vectors pass through, as in
+    :func:`~.similarity.random_hyperplane_key`."""
+    from .similarity import _as_double_vec
+
+    v = _as_double_vec(vec_col)
+    if width is not None:
+        raw = F.col(vec_col)
+        v = F.when(raw.isNull() | (F.size(raw) == width), v).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"IVF assignment: expected dim={width}, got "),
+                    F.size(raw).cast("string"),
+                )
+            ).cast("array<double>")
+        )
+    return df.select(F.col(id_col), v.alias("_v"))
+
+
+def _shard_cap(
+    df: DataFrame, cell_col: str, id_col: str, max_cell_rows: int | None
+) -> DataFrame:
+    """Adds ``_sh``, the row's shard within its ``cell_col`` cell: a cell
+    of n rows splits into ``ceil(n / max_cell_rows)`` shards by the first
+    4 md5 hex digits of the id, so an oracle can replay the split in any
+    engine. ``None`` puts every row in shard 0. One broadcast count
+    aggregate, no eager job."""
+    if max_cell_rows is None:
+        return df.withColumn("_sh", F.lit(0))
+    if max_cell_rows < 1:
+        raise ValueError("max_cell_rows must be >= 1")
+    counts = df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("_cn"))
+    n_shards = F.expr(
+        f"CAST((_cn + {max_cell_rows - 1}) DIV {max_cell_rows} AS INT)"
+    )
+    return (
+        df.join(F.broadcast(counts), cell_col)
+        .withColumn(
+            "_sh",
+            F.pmod(_portable_hash(F.col(id_col).cast("string"), 4), n_shards),
+        )
+        .drop("_cn")
+    )
+
+
+def _int8_sketch(vecs: DataFrame, *keep: str) -> DataFrame:
+    """The ``keep`` columns plus the int8 sketch of each row's UNIT
+    vector (``_v / _nrm``): ``_q`` (bytes, ``round(u / s * 127)``) and
+    its scale ``_s = max|u|``. Dequantized elements are within s/254 of
+    u, which :func:`_int8_bound` turns into a pair bound.
+
+    NaN-proof: Spark evaluates NaN > 0 as TRUE (NaN orders above
+    everything), and ``round(NaN).cast("byte")`` ABORTS under ANSI, so a
+    zero, NaN or inf norm (inf/inf = NaN unit vector) quantizes to all
+    zero with its scale kept; such rows take the bound's always-pass
+    margin and fall through to the exact verify, which NULLs them.
+
+    Materialized ONCE (eager ``localCheckpoint``; n x (dim + ~40)
+    bytes): projection collapse would otherwise inline the ``_s``
+    subtree (array_max over the unit vector) into ``_q``'s per-element
+    lambda — a dim^2 blowup per row — and re-evaluate the sketch on both
+    sides of the pair join (round 12: a 6x wall regression without
+    it)."""
+    nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
+    u = F.transform(
+        F.col("_v"),
+        lambda x: F.when(nrm_ok, x / F.col("_nrm")).otherwise(F.lit(0.0)),
+    )
+    lite = vecs.withColumn("_u", u).withColumn(
+        "_s", F.array_max(F.transform(F.col("_u"), F.abs))
+    )
+    q = F.when(
+        (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
+        F.transform(
+            F.col("_u"),
+            lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
+        ),
+    ).otherwise(F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte")))
+    return lite.select(*keep, "_s", q.alias("_q")).localCheckpoint(eager=True)
+
+
+def _int8_bound(qa: str, qb: str, sa: str, sb: str) -> tuple[Column, Column]:
+    """``(approx, margin)`` for a pair of :func:`_int8_sketch` rows
+    (sketch columns ``qa``/``qb``, scales ``sa``/``sb``): ``|cos -
+    approx| <= sqrt(d)(s_a + s_b)/254 + d s_a s_b/254^2``, and the
+    margin adds 5e-7 because the exact verify rounds cos to 6 dp
+    half-up (a pair at cos = threshold - 5e-7 rounds up to threshold and
+    is KEPT there). So ``approx >= threshold - margin`` keeps a PROVABLE
+    superset of the true pairs. A zero or NaN scale makes the margin
+    2.0, an always-pass for cos in [-1, 1], so the filter never decides
+    differently from the verify."""
+    sa, sb = F.col(sa), F.col(sb)
+    dq = F.aggregate(
+        F.zip_with(
+            F.col(qa), F.col(qb), lambda x, y: x.cast("int") * y.cast("int")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    ).cast("double")
+    d = F.size(F.col(qa)).cast("double")
+    approx = dq * sa * sb / F.lit(127.0 * 127.0)
+    margin = F.when(
+        (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb), F.lit(2.0)
+    ).otherwise(
+        F.sqrt(d) * (sa + sb) / F.lit(254.0)
+        + d * sa * sb / F.lit(254.0 * 254.0)
+        + F.lit(5e-7)
+    )
+    return approx, margin
+
+
+def _join_sides(
+    pairs: DataFrame, rows: DataFrame, id_col: str, *cols: str
+) -> DataFrame:
+    """``pairs`` (id_a, id_b) with ``rows``' ``cols`` joined by id to
+    each side, suffixed ``a`` / ``b`` (``_s`` -> ``_sa``, ``_sb``)."""
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            rows.select(
+                F.col(id_col).alias(f"id_{s}"),
+                *[F.col(c).alias(f"{c}{s}") for c in cols],
+            ),
+            f"id_{s}",
+        )
+    return pairs
+
+
+def _verified_pairs(pairs: DataFrame, vecs: DataFrame, id_col: str) -> DataFrame:
+    """``(id_a, id_b, cos)``: each candidate pair re-joined by id to both
+    sides' ``_v`` and ``_nrm`` and scored with the 6-dp-rounded guarded
+    cosine — shuffles pairs x 2 vectors, so callers prune first."""
+    from .similarity import _cos_from_norms
+
+    return (
+        _join_sides(pairs, vecs, id_col, "_v", "_nrm")
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                _cos_from_norms(
+                    F.col("_va"), F.col("_vb"), F.col("_nrma"), F.col("_nrmb")
+                ),
+                6,
+            ).alias("cos"),
+        )
+    )
+
+
 def semantic_dedup(
     df: DataFrame,
     vec_col: str,
@@ -1241,6 +1272,9 @@ def semantic_dedup(
     executor storage until the returned DataFrame is garbage-collected.
     Callers that separate plan-build from execution pay the compute at
     build time.
+
+    A vector whose length is not the centroid width raises (it has no
+    defined cell); NULL vectors pass through as singletons.
 
     Cross-cell near-duplicates are uncompared by design — the SemDeDup
     trade-off that bounds join fan-out to the largest cell; raise
@@ -1287,16 +1321,10 @@ def semantic_dedup(
     """
     from .similarity import ivf_assign
 
-    use_int8 = _resolve_int8_filter(
-        int8_filter, len(centroids[0]) if centroids else 0
-    )
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    cells = ivf_assign(v, "_v", centroids, "_cell")
     return _semantic_dedup_cells(
-        cells, id_col, threshold, n_blocks, max_cell_rows, use_int8
+        df, vec_col, id_col, centroids,
+        lambda v: ivf_assign(v, "_v", centroids, "_cell"),
+        threshold, n_blocks, max_cell_rows, int8_filter,
     )
 
 
@@ -1322,70 +1350,46 @@ def semantic_dedup_tree(
     including the ``int8_filter="auto"`` vector-width default."""
     from .similarity import ivf_assign_tree
 
-    use_int8 = _resolve_int8_filter(
-        int8_filter, len(coarse[0]) if coarse else 0
-    )
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    cells = ivf_assign_tree(v, "_v", coarse, sub, "_cell")
     return _semantic_dedup_cells(
-        cells, id_col, threshold, n_blocks, max_cell_rows, use_int8
+        df, vec_col, id_col, coarse,
+        lambda v: ivf_assign_tree(v, "_v", coarse, sub, "_cell"),
+        threshold, n_blocks, max_cell_rows, int8_filter,
     )
 
 
 def _semantic_dedup_cells(
-    assigned: DataFrame,
+    df: DataFrame,
+    vec_col: str,
     id_col: str,
+    centroids: list[list[float]],
+    assign: Callable[[DataFrame], DataFrame],
     threshold: float,
     n_blocks: int,
     max_cell_rows: int | None,
-    int8_filter: bool = False,
+    int8_filter: bool | str,
 ) -> DataFrame:
-    """Shared in-cell near-dup pipeline over (id, _v, _cell) rows: hash
-    sub-blocks, optional shard cap, blocked self-join, cosine verify,
-    CC closure, smallest-id survivors (see :func:`semantic_dedup`)."""
+    """Shared pipeline of :func:`semantic_dedup` and
+    :func:`semantic_dedup_tree`: double cast with the width guard,
+    ``assign`` ((id, _v) rows -> + _cell), hash sub-blocks, optional
+    shard cap, blocked self-join, cosine verify, CC closure, smallest-id
+    survivors. ``centroids`` (the first level's) give the vector width
+    for the guard and the int8 auto knob."""
     from .graph import connected_components
-    from .similarity import dot, l2_norm
+    from .similarity import _cos_from_norms, l2_norm
 
+    width = len(centroids[0]) if centroids else None
+    use_int8 = _resolve_int8_filter(int8_filter, width or 0)
     cells = (
-        assigned
+        assign(_dvec_rows(df, vec_col, id_col, width))
         .withColumn("_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)))
         # norm precomputed ONCE per vector (identical double to the
         # inline form, so scores are unchanged); the pair join would
         # otherwise recompute it per candidate pair
         .withColumn("_nrm", l2_norm(F.col("_v")))
     )
-    if max_cell_rows is not None:
-        if max_cell_rows < 1:
-            raise ValueError("max_cell_rows must be >= 1")
-        counts = cells.groupBy("_cell").agg(F.count(F.lit(1)).alias("_cn"))
-        cells = (
-            cells.join(F.broadcast(counts), "_cell")
-            .withColumn(
-                "_nsh",
-                F.expr(
-                    f"CAST((_cn + {max_cell_rows - 1}) DIV {max_cell_rows} "
-                    "AS INT)"
-                ),
-            )
-            .withColumn(
-                "_shard",
-                F.pmod(
-                    F.conv(
-                        F.substring(F.md5(F.col(id_col).cast("string")), 1, 4),
-                        16,
-                        10,
-                    ).cast("int"),
-                    F.col("_nsh"),
-                ),
-            )
-            .drop("_cn", "_nsh")
-        )
-    else:
-        cells = cells.withColumn("_shard", F.lit(0))
-    cells = cells.localCheckpoint(eager=True)
+    cells = _shard_cap(cells, "_cell", id_col, max_cell_rows).localCheckpoint(
+        eager=True
+    )
 
     def blocked_pairs(side: DataFrame):
         lo = side.withColumn(
@@ -1398,7 +1402,7 @@ def _semantic_dedup_cells(
         return lo.join(
             hi,
             (F.col("a._cell") == F.col("b._cell"))
-            & (F.col("a._shard") == F.col("b._shard"))
+            & (F.col("a._sh") == F.col("b._sh"))
             & (F.col("a._blk") == F.col("b._lo"))
             & (F.col("a._hi") == F.col("b._blk"))
             & (
@@ -1407,99 +1411,25 @@ def _semantic_dedup_cells(
             ),
         )
 
-    # ANSI-guarded cosine: a zero vector (norm 0) yields NULL, so its
-    # pairs drop at the >= threshold filter instead of aborting the job
-    # with DIVIDE_BY_ZERO (Spark 4.1 ANSI raises even on double
-    # division) — and matches the oracle's NaN-compares-false semantics
-    def safe_cos(dp, na, nb):
-        den = na * nb
-        # NaN -> NULL too: Spark orders NaN above all values, so an
-        # unguarded NaN cosine would pass every >= threshold filter
-        return F.round(F.when(den != 0, F.nanvl(dp / den, F.lit(None).cast("double"))), 6)
-
-    exact_cos = safe_cos(
-        dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
-    )
-    if int8_filter:
+    ordered_ids = [
+        F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
+        F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
+    ]
+    if use_int8:
         # int8 candidate pass: the blocked self-join ships every vector
-        # ~n_blocks/2 times, so it shuffles sketches instead — the UNIT
-        # vector quantized to int8 bytes (8x smaller than doubles) plus
-        # its per-vector quantization scale. The approximate filter is a
-        # PROVABLE superset of the true pairs: with u = v/|v|, s = max|u|
-        # and per-element error <= s/254, |cos - approx| <=
-        # sqrt(d)*(s_a + s_b)/254 + d*s_a*s_b/254^2; margin adds the
-        # verify's 6-dp rounding slack (5e-7) on top, so keeping
-        # approx >= threshold - margin can never drop a pair the exact
-        # path would keep.
-        # Survivors re-join the exact doubles (keyed by id — shipped
-        # ONCE, not B/2 times) and pass the IDENTICAL rounded-cosine
-        # verify, so the output is bit-for-bit the exact path's.
-        # NaN-proof guards throughout: Spark evaluates NaN > 0 as TRUE
-        # (NaN orders above everything), and round(NaN).cast("byte")
-        # ABORTS under ANSI — a corrupt embedding must fall through to
-        # the exact verify (which NULLs it), never kill the job.
-        nrm_ok = (F.col("_nrm") > 0) & ~F.isnan(F.col("_nrm"))
-        u = F.transform(
-            F.col("_v"),
-            lambda x: F.when(nrm_ok, x / F.col("_nrm"))
-            .otherwise(F.lit(0.0)),
-        )
-        lite = cells.withColumn("_u", u).withColumn(
-            "_s", F.array_max(F.transform(F.col("_u"), F.abs))
-        )
-        q = F.when(
-            (F.col("_s") > 0) & ~F.isnan(F.col("_s")),
-            F.transform(
-                F.col("_u"),
-                lambda x: F.round(x / F.col("_s") * 127).cast("byte"),
-            ),
-        ).otherwise(F.transform(F.col("_u"), lambda x: F.lit(0).cast("byte")))
-        # materialize the per-id sketch ONCE (round-12, found via the
-        # bucketed near-dup arm: 6x wall regression without it):
-        # projection collapse inlines the _s subtree (array_max over
-        # the unit vector) into q's per-element lambda — a dim^2 blowup
-        # per row — and re-evaluates the sketch on both sides of the
-        # blocked self-join. Bounded: n x (dim + ~40) bytes.
-        lite = lite.select(
-            id_col, "_cell", "_shard", "_blk", "_s", q.alias("_q")
-        ).localCheckpoint(eager=True)
-        dq = F.aggregate(
-            F.zip_with(
-                F.col("a._q"),
-                F.col("b._q"),
-                lambda x, y: x.cast("int") * y.cast("int"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-        sa, sb = F.col("a._s"), F.col("b._s")
-        d = F.size(F.col("a._q")).cast("double")
-        approx = dq * sa * sb / F.lit(127.0 * 127.0)
-        # zero vectors (s = 0) always pass to the exact verify, which
-        # alone decides their fate (NULL cosine -> dropped) — the
-        # filter must never decide differently from the verify
-        # (cos in [-1, 1] makes margin 2 an always-pass)
-        margin = F.when(
-            (sa == 0) | (sb == 0) | F.isnan(sa) | F.isnan(sb), F.lit(2.0)
-        ).otherwise(
-            F.sqrt(d) * (sa + sb) / F.lit(254.0)
-            + d * sa * sb / F.lit(254.0 * 254.0)
-            # the exact verify rounds cos to 6 dp half-up, so a pair at
-            # cos = threshold - 5e-7 still rounds up to threshold and is
-            # KEPT there — the filter's slack must cover that too or the
-            # superset claim has a 5e-7 hole
-            + F.lit(5e-7)
-        )
+        # ~n_blocks/2 times, so it ships the int8 sketches instead (8x
+        # smaller than doubles). The bound's filter keeps a PROVABLE
+        # superset of the true pairs; survivors re-join the exact
+        # doubles (keyed by id — shipped ONCE, not B/2 times) and pass
+        # the IDENTICAL rounded-cosine verify, so the output is
+        # bit-for-bit the exact path's.
+        lite = _int8_sketch(cells, id_col, "_cell", "_sh", "_blk")
+        approx, margin = _int8_bound("a._q", "b._q", "a._s", "b._s")
         cand = (
             blocked_pairs(lite)
             .filter(approx >= F.lit(threshold) - margin)
             .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
+                *ordered_ids,
                 # accept-sure flag: approx - margin >= threshold means
                 # cos >= threshold + 5e-7 (margin already carries the
                 # 6-dp rounding slack), so round6(cos) >= threshold is
@@ -1533,25 +1463,11 @@ def _semantic_dedup_cells(
         # small even when most in-cell pairs are candidates)
         cand = cand.localCheckpoint(eager=True)
         band = (
-            cand.filter(~F.col("_sure"))
-            .select("id_a", "id_b")
-            .join(
-                cells.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col("_v").alias("_va"),
-                    F.col("_nrm").alias("_na"),
-                ),
-                "id_a",
+            _verified_pairs(
+                cand.filter(~F.col("_sure")).select("id_a", "id_b"),
+                cells,
+                id_col,
             )
-            .join(
-                cells.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_v").alias("_vb"),
-                    F.col("_nrm").alias("_nb"),
-                ),
-                "id_b",
-            )
-            .select("id_a", "id_b", exact_cos.alias("cos"))
             .filter(F.col("cos") >= threshold)
             .select("id_a", "id_b")
         )
@@ -1564,16 +1480,15 @@ def _semantic_dedup_cells(
         pairs = (
             blocked_pairs(cells)
             .select(
-                F.least(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_a"),
-                F.greatest(
-                    F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-                ).alias("id_b"),
-                safe_cos(
-                    dot(F.col("a._v"), F.col("b._v")),
-                    F.col("a._nrm"),
-                    F.col("b._nrm"),
+                *ordered_ids,
+                F.round(
+                    _cos_from_norms(
+                        F.col("a._v"),
+                        F.col("b._v"),
+                        F.col("a._nrm"),
+                        F.col("b._nrm"),
+                    ),
+                    6,
                 ).alias("cos"),
             )
             .filter(F.col("cos") >= threshold)

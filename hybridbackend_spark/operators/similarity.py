@@ -6,6 +6,19 @@ so the kernels run without Python. At 100 TB the exact path is only for
 a broadcast-able query set (queries x corpus partition-local score +
 per-query top-k via window); the LSH/IVF paths bound the candidate set
 per query by bucket.
+
+One private helper per vector idea, shared with the near-dup operators
+in ``dedup``:
+- ``_cos_from_norms``: the zero-norm/NaN-guarded cosine from
+  precomputed norms (behind :func:`cosine`; pair scorers round it to
+  6 dp).
+- ``_probe_cells``: each vector's ``n_probe`` nearest centroid ids, one
+  parsed SQL expression.
+- ``_lloyd_means``: one Lloyd update (posexplode, exact integer-scaled
+  group sums, one bounded collect) for :func:`kmeans_train` and
+  :func:`kmeans_train_tree`. The flat trainer stays separate from the
+  tree one: at k2=1 the tree form launches 9 jobs where the flat one
+  launches 3 (400 x 8 rows, k=8, iters=2, AQE off).
 """
 
 from __future__ import annotations
@@ -64,7 +77,14 @@ def cosine(a: Column, b: Column) -> Column:
     NULL instead drops at filters and sorts last under desc ordering,
     matching DuckDB's NaN-compares-false. One zero/NaN embedding in
     100 TB must not kill (or silently destroy) the run."""
-    den = l2_norm(a) * l2_norm(b)
+    return _cos_from_norms(a, b, l2_norm(a), l2_norm(b))
+
+
+def _cos_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """:func:`cosine` with the norms ``na``/``nb`` passed in, so a pair
+    scorer computes each vector's norm once, not once per pair; the same
+    zero-norm and NaN guards. Pair scorers round it to 6 dp."""
+    den = na * nb
     return F.when(den != 0, F.nanvl(dot(a, b) / den, _null_d()))
 
 
@@ -203,15 +223,8 @@ def cosine_topk(
         "_qid",
         "_cid",
         F.round(
-            # guards: zero-norm -> NULL (ANSI-safe), NaN -> NULL (Spark
-            # orders NaN above all, it would pass every filter)
-            F.when(
-                F.col("_qn") * F.col("_cn") != 0,
-                F.nanvl(
-                    dot(F.col("_qv"), F.col("_cv"))
-                    / (F.col("_qn") * F.col("_cn")),
-                    _null_d(),
-                ),
+            _cos_from_norms(
+                F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")
             ),
             6,
         ).alias("cos"),
@@ -356,6 +369,20 @@ def _argmin_pairs_sql(vexpr: str, centroids: list[list[float]]) -> str:
     return f"array({pairs})"
 
 
+def _probe_cells(
+    vexpr: str, centroids: list[list[float]], n_probe: int
+) -> Column:
+    """The ids of each vector's ``n_probe`` nearest centroids, nearest
+    first (ties to the lower id): the :func:`_argmin_pairs_sql` struct
+    array sorted and sliced, as ONE parsed SQL expression. The
+    Column-builder form issued ~k*dim py4j round trips of driver time."""
+    return F.expr(
+        "transform(slice(array_sort("
+        f"{_argmin_pairs_sql(vexpr, centroids)}"
+        f"), 1, {int(n_probe)}), s -> s.i)"
+    )
+
+
 def ivf_assign(
     df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "ivf_cell"
 ) -> DataFrame:
@@ -432,18 +459,12 @@ def cosine_topk_ivf(
         centroids,
         "_cell",
     )
-    # probe-cell list rendered as ONE parsed SQL expression (same
-    # argmin struct array, sorted and sliced — see ivf_assign): the
-    # Column-builder form issued ~k*dim py4j round trips of driver time
-    probe_cells = F.expr(
-        "transform(slice(array_sort("
-        f"{_argmin_pairs_sql(_dvec_sql(query_vec), centroids)}"
-        f"), 1, {int(n_probe)}), s -> s.i)"
-    )
     q_probed = queries.select(
         F.col(query_id).alias("_qid"),
         v.alias("_qv"),
-        F.explode(probe_cells).alias("_cell"),
+        F.explode(
+            _probe_cells(_dvec_sql(query_vec), centroids, n_probe)
+        ).alias("_cell"),
     )
     cands = c_assigned.join(F.broadcast(q_probed), "_cell")
     if exclude_self:
@@ -603,30 +624,37 @@ def kmeans_train(
 
     vecs = df.select(_as_double_vec(vec_col).alias("_v"))
     for _ in range(iters):
-        assigned = ivf_assign(vecs, "_v", centroids, "_cell")
-        sums = (
-            assigned.select(
-                "_cell", F.posexplode("_v").alias("_pos", "_x")
-            )
-            .groupBy("_cell", "_pos")
-            .agg(
-                F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .collect()
+        means = _lloyd_means(
+            ivf_assign(vecs, "_v", centroids, "_cell"), ["_cell"], scale
         )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in sums:
-            by_cell.setdefault(r["_cell"], {})[r["_pos"]] = r["_s"] / (
-                float(scale) * r["_n"]
-            )
-        centroids = [
-            [by_cell[c][p] for p in sorted(by_cell[c])]
-            if c in by_cell
-            else centroids[c]  # empty cell: carry previous centroid
-            for c in range(k)
-        ]
+        # empty cell: carry previous centroid
+        centroids = [means.get((c,), centroids[c]) for c in range(k)]
     return centroids
+
+
+def _lloyd_means(
+    assigned: DataFrame, keys: list[str], scale: int
+) -> dict[tuple, list[float]]:
+    """One Lloyd update: the mean ``_v`` of every ``keys`` group that has
+    rows, keyed by the group's key tuple. posexplode, then a (keys,
+    position) partial+final sum of exact ``round(x * scale)`` longs, then
+    one driver collect bounded by groups x dim rows (the centroids must
+    fit on the driver by definition). Integer sums make the means
+    bit-reproducible across partitionings and engines."""
+    rows = (
+        assigned.select(*keys, F.posexplode("_v").alias("_p", "_x"))
+        .groupBy(*keys, "_p")
+        .agg(
+            F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
+            F.count(F.lit(1)).alias("_n"),
+        )
+        .collect()
+    )
+    by_group: dict[tuple, dict[int, float]] = {}
+    for r in rows:
+        mean = r["_s"] / (float(scale) * r["_n"])
+        by_group.setdefault(tuple(r[k] for k in keys), {})[r["_p"]] = mean
+    return {g: [m[p] for p in sorted(m)] for g, m in by_group.items()}
 
 
 def _sub_argmin(
@@ -788,25 +816,11 @@ def kmeans_train_tree(
         by_cell.setdefault(r["_c1"], {})[r["_j"]] = list(r["_v"])
     sub = {c1: [m[j] for j in sorted(m)] for c1, m in by_cell.items()}
     for _ in range(iters):
-        assigned = _sub_argmin(a, "_v", sub, "_j")
-        upd = (
-            assigned.select(
-                "_c1", "_j", F.posexplode("_v").alias("_p", "_x")
-            )
-            .groupBy("_c1", "_j", "_p")
-            .agg(
-                F.sum(F.round(F.col("_x") * scale).cast("long")).alias("_s"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .collect()
+        means = _lloyd_means(
+            _sub_argmin(a, "_v", sub, "_j"), ["_c1", "_j"], scale
         )  # bounded: <= k1*k2*d rows
-        means: dict[tuple[int, int], dict[int, float]] = {}
-        for r in upd:
-            means.setdefault((r["_c1"], r["_j"]), {})[r["_p"]] = r["_s"] / (
-                float(scale) * r["_n"]
-            )
-        for (c1, j), dims in means.items():
-            sub[c1][j] = [dims[p] for p in sorted(dims)]
+        for (c1, j), mean in means.items():
+            sub[c1][j] = mean
     return coarse, sub
 
 

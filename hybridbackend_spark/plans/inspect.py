@@ -161,16 +161,16 @@ def assert_broadcast_join(df: DataFrame) -> None:
         )
 
 
-def has_unpartitioned_window(df: DataFrame) -> bool:
+def has_unpartitioned_window(df: DataFrame | str) -> bool:
     """True when the physical plan contains a window with an EMPTY
     partition spec (WindowExec funnels the input through one task).
     Catalyst constant-folds literal partition keys away, so the only
     honest contract is: global windows are intentional, bounded by a
     guarded upstream aggregate, and ALLOWLISTED in
-    tests/test_plan_scale.py — this detector powers that gate."""
-    import re
-
-    plan = physical_plan(df)
+    tests/test_plan_scale.py — this detector powers that gate.
+    ``df`` may also be the text of a :func:`physical_plan`, so a gate
+    over many queries plans each one once."""
+    plan = df if isinstance(df, str) else physical_plan(df)
     # windowspecdefinition(partExprs..., order ASC/DESC..., frame).
     # Empty partition spec => first argument is either the frame itself
     # (no ordering) or an ordering expression carrying ASC/DESC.

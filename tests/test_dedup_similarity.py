@@ -1277,3 +1277,177 @@ def test_ivf_pq_sql_parity(spark, sf_dir):
     )
     assert old_topk.exceptAll(new_topk).count() == 0
     assert new_topk.exceptAll(old_topk).count() == 0
+
+
+def test_cosine_near_dup_ivf_shard_cap(spark):
+    """The IVF arm's ``max_cell_rows`` cap: a cell of n rows splits into
+    ceil(n / max_cell_rows) md5 shards of the id, and pairs are emitted
+    only within one shard of one cell. Threshold -1 keeps every
+    compared pair, so the emitted set IS the compared set."""
+    import hashlib
+    import itertools
+    import math
+
+    import pytest
+
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    rows = [(i, [1.0, 0.01 * i]) for i in range(30)]  # cell 0
+    rows += [(100 + i, [0.01 * i, 1.0]) for i in range(10)]  # cell 1
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    cell_of = {i: 0 if i < 100 else 1 for i, _ in rows}
+    size = {0: 30, 1: 10}
+
+    def emitted(cap):
+        return {
+            (r.id_a, r.id_b)
+            for r in cosine_near_dup_pairs(
+                df, "v", "vec_id", threshold=-1.0, bucket_bits=4, dim=2,
+                blocking="ivf", centroids=cents, n_probe=1,
+                max_cell_rows=cap,
+            ).collect()
+        }
+
+    def expected(cap):
+        def shard(i):
+            n_sh = 1 if cap is None else math.ceil(size[cell_of[i]] / cap)
+            return int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) % n_sh
+
+        return {
+            (a, b)
+            for a, b in itertools.combinations(sorted(cell_of), 2)
+            if cell_of[a] == cell_of[b] and shard(a) == shard(b)
+        }
+
+    uncapped = expected(None)
+    assert emitted(None) == uncapped
+    assert len(uncapped) == 30 * 29 // 2 + 10 * 9 // 2
+    for cap in (10, 7):  # cell 0 -> 3 and 5 shards, cell 1 -> 1 and 2
+        got = emitted(cap)
+        assert got == expected(cap)
+        assert got < uncapped
+    with pytest.raises(ValueError, match="max_cell_rows"):
+        cosine_near_dup_pairs(
+            df, "v", "vec_id", bucket_bits=4, dim=2, blocking="ivf",
+            centroids=cents, max_cell_rows=0,
+        )
+
+
+def test_ivf_arms_raise_on_vector_width_mismatch(spark):
+    """A vector whose length differs from the centroid width has no
+    defined cell: the IVF arms raise instead of assigning it from NULL
+    distances (which used to drop its pairs without an error). NULL
+    vectors pass through, as in ``random_hyperplane_key``."""
+    import pytest
+
+    from hybridbackend_spark.operators.dedup import (
+        semantic_dedup,
+        semantic_dedup_tree,
+    )
+
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    ok = [(0, [1.0, 0.0, 0.0]), (1, [0.99, 0.1, 0.0]), (2, [0.0, 1.0, 0.0])]
+    schema = "vec_id long, v array<double>"
+    bad = spark.createDataFrame(ok + [(3, [0.98, 0.1, 0.0, 0.0])], schema)
+    with_null = spark.createDataFrame(ok + [(3, None)], schema)
+    calls = {
+        "cosine_near_dup_pairs": lambda df: cosine_near_dup_pairs(
+            df, "v", "vec_id", threshold=0.9, bucket_bits=4, dim=3,
+            blocking="ivf", centroids=cents, n_probe=1,
+        ),
+        "semantic_dedup": lambda df: semantic_dedup(
+            df, "v", "vec_id", cents, threshold=0.9
+        ),
+        "semantic_dedup_tree": lambda df: semantic_dedup_tree(
+            df, "v", "vec_id", cents, {0: [cents[0]], 1: [cents[1]]},
+            threshold=0.9,
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(Exception, match="expected dim=3, got 4"):
+            call(bad).collect()
+        call(with_null).collect()  # no raise
+    assert {
+        (r.id_a, r.id_b) for r in calls["cosine_near_dup_pairs"](
+            with_null
+        ).collect()
+    } == {(0, 1)}
+    assert sorted(
+        r.vec_id for r in calls["semantic_dedup"](with_null).collect()
+    ) == [0, 2, 3]
+
+
+# Jobs launched by build + collect of each vector step on fixed inputs,
+# AQE off (see test_graph_loop_job_counts_pinned for why). The flat
+# trainer's 3 vs the two-level trainer's 9 at k2=1 is why the flat
+# k-means is not routed through the tree form.
+VECTOR_STEP_JOBS = {
+    "kmeans_train": 3,
+    "kmeans_train_tree_k2_1": 9,
+    "semantic_dedup": 6,
+    "semantic_dedup_int8": 8,
+    "cosine_near_dup_pairs_lsh": 1,
+    "cosine_near_dup_pairs_ivf": 2,
+    "cosine_near_dup_pairs_ivf_trained": 5,
+    "cosine_near_dup_pairs_int8": 2,
+}
+
+
+def test_vector_step_job_counts_pinned(spark, count_jobs):
+    import random
+
+    from hybridbackend_spark.operators.dedup import semantic_dedup
+    from hybridbackend_spark.operators.similarity import (
+        kmeans_train,
+        kmeans_train_tree,
+    )
+
+    rng = random.Random(11)
+    train = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(400)],
+        "vid long, vec array<double>",
+    )
+    anchors = [[10.0, 0.0, 0.0], [0.0, 10.0, 0.0], [0.0, 0.0, 10.0]]
+    vecs = spark.createDataFrame(
+        [
+            (i, [x + rng.uniform(-0.5, 0.5) for x in anchors[i % 3]])
+            for i in range(60)
+        ],
+        "vec_id long, v array<double>",
+    )
+    cents = [list(a) for a in anchors]
+    near = dict(threshold=0.95, bucket_bits=2, dim=3)
+    calls = {
+        "kmeans_train": lambda: kmeans_train(
+            train, "vec", k=8, iters=2, id_col="vid"
+        ),
+        "kmeans_train_tree_k2_1": lambda: kmeans_train_tree(
+            train, "vec", "vid", k1=8, k2=1, iters=2
+        ),
+        "semantic_dedup": lambda: semantic_dedup(
+            vecs, "v", "vec_id", cents, int8_filter=False
+        ).collect(),
+        "semantic_dedup_int8": lambda: semantic_dedup(
+            vecs, "v", "vec_id", cents, int8_filter=True
+        ).collect(),
+        "cosine_near_dup_pairs_lsh": lambda: cosine_near_dup_pairs(
+            vecs, "v", "vec_id", blocking="lsh", int8_filter=False, **near
+        ).collect(),
+        "cosine_near_dup_pairs_ivf": lambda: cosine_near_dup_pairs(
+            vecs, "v", "vec_id", blocking="ivf", centroids=cents,
+            int8_filter=False, max_cell_rows=15, **near
+        ).collect(),
+        "cosine_near_dup_pairs_ivf_trained": lambda: cosine_near_dup_pairs(
+            vecs, "v", "vec_id", blocking="ivf", ivf_k=3,
+            int8_filter=False, **near
+        ).collect(),
+        "cosine_near_dup_pairs_int8": lambda: cosine_near_dup_pairs(
+            vecs, "v", "vec_id", blocking="lsh", int8_filter=True, **near
+        ).collect(),
+    }
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got = {name: count_jobs(call) for name, call in calls.items()}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got == VECTOR_STEP_JOBS

@@ -170,20 +170,30 @@ def test_no_unreduced_fact_broadcast_any_query(spark, sf_dir, name):
     )
 
 
-def test_no_cartesian_product_in_any_batch_query(spark, sf_dir):
+@pytest.fixture(scope="session")
+def batch_plans(spark, sf_dir):
+    """Physical-plan text of every registered batch query at normal
+    thresholds, built once for the global plan gates (building a query
+    can run eager jobs, so each build is paid once per session)."""
+    from hybridbackend_spark.queries import get_queries
+
+    return {
+        name: physical_plan(fn(spark, sf_dir))
+        for name, fn in get_queries().items()
+        if not name.startswith("stream_")
+    }
+
+
+def test_no_cartesian_product_in_any_batch_query(batch_plans):
     """Global gate: at normal thresholds, NO batch query may plan a
     CartesianProduct (1-row scalar combines plan as
     BroadcastNestedLoopJoin; a cartesian of data-proportional sides is
     always a scale bug). One pass over every registered batch plan.
     Only at normal thresholds: with auto-broadcast disabled, scalar
     1-row crossJoins legitimately degrade to CartesianProduct."""
-    from hybridbackend_spark.queries import get_queries
-
     offenders = []
-    for name, fn in get_queries().items():
-        if name.startswith("stream_"):
-            continue
-        if "CartesianProduct" in physical_plan(fn(spark, sf_dir)):
+    for name, plan in batch_plans.items():
+        if "CartesianProduct" in plan:
             offenders.append(name)
     assert offenders == []
 
@@ -270,20 +280,17 @@ _GLOBAL_WINDOW_ALLOWLIST = {
 }
 
 
-def test_global_windows_are_allowlisted(spark, sf_dir):
+def test_global_windows_are_allowlisted(batch_plans):
     """THE unpartitioned-window gate: scan every registered batch
     query's physical plan; the set that funnels a window through one
     task must be exactly the documented allowlist (bounded inputs by
     construction + executable guards). Catalyst folds literal partition
     keys, so plan inspection — not code convention — is the contract."""
     from hybridbackend_spark.plans.inspect import has_unpartitioned_window
-    from hybridbackend_spark.queries import get_queries
 
     offenders = set()
-    for name, fn in get_queries().items():
-        if name.startswith("stream_"):
-            continue
-        if has_unpartitioned_window(fn(spark, sf_dir)):
+    for name, plan in batch_plans.items():
+        if has_unpartitioned_window(plan):
             offenders.add(name)
     assert offenders == _GLOBAL_WINDOW_ALLOWLIST, (
         f"unexpected global-window queries: "
